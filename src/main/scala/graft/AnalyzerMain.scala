@@ -206,6 +206,20 @@ object AnalyzerMain {
           "fresh, or point --checkpoint-dir at a new location.")
   }
 
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** Default `spark.sql.shuffle.partitions` to the cluster's parallelism when
+    * the user has not set it. The topology's one shuffle is the statistics
+    * state exchange, and every shuffle partition is a state store that
+    * commits on every trigger: at Spark's default of 200, 200 RocksDB stores
+    * commit per trigger for a few thousand `(topic, type)` keys (measured:
+    * 13–15 s per 20k-row trigger, against about 2.5 s with one partition per
+    * core). A query restarted from an existing checkpoint keeps the value
+    * recorded in its offset log, which Spark restores over this one. */
+  def defaultShufflePartitions(spark: SparkSession): Unit =
+    if (!org.apache.spark.sql.graftbridge.confIsSet(spark, ShufflePartitions))
+      spark.conf.set(ShufflePartitions, spark.sparkContext.defaultParallelism.toLong)
+
   def main(args: Array[String]): Unit = {
     val cfg = parseArgs(args)
     val builder = SparkSession.builder()
@@ -215,6 +229,7 @@ object AnalyzerMain {
       .map(builder.config("spark.sql.streaming.stateStore.providerClass", _))
       .getOrElse(builder)
       .getOrCreate()
+    defaultShufflePartitions(spark)
     assertCheckpointLayout(spark, cfg.checkpointDir)
     topology(spark, cfg).queryName("dead-letter-analyzer").start()
     spark.streams.awaitAnyTermination()

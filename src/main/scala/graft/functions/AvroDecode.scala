@@ -9,7 +9,7 @@ import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.io.DecoderFactory
 
 /**
- * Confluent-wire-format Avro decode for [[BruteForce.decodedWithAvro]]
+ * Confluent-wire-format Avro decode for [[BruteForce.withDecoded]]
  * (reference `BruteForceSerde`'s schema-registry-Avro first tier, SURVEY §2.2
  * T18): byte 0 is the magic 0, bytes 1-4 the big-endian schema id, the rest
  * binary Avro. Schema ids resolve through the [[SchemaProvider]] seam (static

@@ -2,7 +2,7 @@ package graft.functions
 
 import graft.model.Schemas
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -82,13 +82,16 @@ object BruteForce {
   private def utf8(bin: Column): Column = bin.cast("string")
   private def isCleanUtf8(bin: Column): Column = is_valid_utf8(utf8(bin))
 
-  /** Parse a candidate dead-letter JSON rendering: (isDeadLetter, struct). */
-  private def dlFromJson(txt: Column): (Column, Column) = {
-    // cheap pre-gate: a JSON dead letter must contain the literal key
-    // `"description"`, so the (expensive) JSON parse is skipped for the vast
-    // majority of payloads. (A \u-escaped key would slip past the gate —
-    // acceptable for a best-effort brute-force decoder.)
-    val dl = when(txt.contains("\"description\""), from_json(txt, deadLetterJson))
+  /** The JSON dead-letter parse of a candidate rendering, null when it cannot
+    * be one. Cheap pre-gate: a JSON dead letter must contain the literal key
+    * `"description"`, so the (expensive) parse is skipped for the vast
+    * majority of payloads. (A \u-escaped key would slip past the gate —
+    * acceptable for a best-effort brute-force decoder.) */
+  private def jsonOf(txt: Column): Column =
+    when(txt.contains("\"description\""), DeadLetterJson.parse(txt))
+
+  /** (isDeadLetter, dead-letter struct) of a [[jsonOf]] result. */
+  private def deadLetterOf(dl: Column): (Column, Column) = {
     val isDl = dl.isNotNull && dl.getField("description").isNotNull &&
       dl.getField("cause").isNotNull
     val deadLetter = struct(
@@ -102,53 +105,70 @@ object BruteForce {
     (isDl, deadLetter)
   }
 
-  /** struct(kind, text, dead_letter) — `dead_letter` non-null iff kind =
-    * 'dead_letter'. The Avro tier activates when the in-scope [[DecodeConfig]]
-    * carries an active [[SchemaProvider]] (default: none). */
-  def decoded(bin: Column)(implicit dc: DecodeConfig): Column =
-    decodedWithAvro(bin, dc.schemas)
+  /** Chain step 2's rendering: the Confluent-framed record as compact JSON,
+    * null for unframed bytes, unknown ids and failed decodes; None when no
+    * schema provider is active. The framing gate (magic byte 0, >= 5 bytes —
+    * the 1+4-byte header alone is a valid frame for a zero-field record
+    * body, matching AvroDecode.render's minimum) is pure column arithmetic;
+    * only gated rows reach the Avro-decode function. */
+  private def avroText(bin: Column, provider: SchemaProvider): Option[Column] =
+    if (!provider.isActive) None
+    else {
+      val decoder = AvroDecode(provider)
+      val gate = bin.isNotNull && length(bin) >= 5 &&
+        substring(bin, 1, 1) === lit(Array[Byte](0))
+      Some(when(gate, udf((b: Array[Byte]) => decoder.render(b)).apply(bin)))
+    }
 
-  /** [[decoded]] over a static id→schema map (test/fixture convenience). */
-  def decodedWithAvro(bin: Column, schemasById: Map[Int, String]): Column =
-    decodedWithAvro(bin, StaticSchemas(schemasById))
-
-  /** [[decoded]] with a Confluent-wire-format Avro tier tried first (chain
-    * step 2), resolving schema ids through `provider` — the reference's
-    * registry-first serde chain with the registry behind the seam. */
-  def decodedWithAvro(bin: Column, provider: SchemaProvider): Column = {
+  /** struct(kind, text, dead_letter) of `bin` from its per-row parts: UTF-8
+    * validity, the [[jsonOf]] parse of the text, and (Avro tier) the record
+    * rendering with its parse. `dead_letter` is non-null iff kind =
+    * 'dead_letter'. */
+  private def decodedOf(bin: Column, valid: Column, json: Column,
+      avro: Option[(Column, Column)]): Column = {
     val txt = utf8(bin)
-    val (isDl, deadLetter) = dlFromJson(txt)
+    val (isDl, deadLetter) = deadLetterOf(json)
     val base = when(bin.isNull, lit(null).cast(decodedType))
-      .when(isCleanUtf8(bin) && isDl,
+      .when(valid && isDl,
         struct(lit("dead_letter").as("kind"), txt.as("text"), deadLetter.as("dead_letter")))
-      .when(isCleanUtf8(bin),
+      .when(valid,
         struct(lit("string").as("kind"), txt.as("text"),
           lit(null).cast(deadLetterStruct).as("dead_letter")))
       .otherwise(
         struct(lit("binary").as("kind"), lower(hex(bin)).as("text"),
           lit(null).cast(deadLetterStruct).as("dead_letter")))
-    if (!provider.isActive) base
-    else {
-      // Confluent framing gate (magic byte 0, >= 5 bytes — the 1+4-byte
-      // header alone is a valid frame for a zero-field record body, matching
-      // AvroDecode.render's minimum) is pure column
-      // arithmetic; only gated rows reach the Avro-decode function (CaseWhen
-      // evaluates the matched branch only). The decode renders the record as
-      // compact JSON — a failed decode or unknown id yields null and falls
-      // through to the remaining tiers.
-      val decoder = AvroDecode(provider)
-      val gate = bin.isNotNull && length(bin) >= 5 &&
-        substring(bin, 1, 1) === lit(Array[Byte](0))
-      val avroTxt = udf((b: Array[Byte]) => decoder.render(b)).apply(bin)
-      val (avroIsDl, avroDl) = dlFromJson(avroTxt)
-      when(gate && avroTxt.isNotNull && avroIsDl,
+    avro.fold(base) { case (avroTxt, avroJson) =>
+      val (avroIsDl, avroDl) = deadLetterOf(avroJson)
+      when(avroTxt.isNotNull && avroIsDl,
           struct(lit("dead_letter").as("kind"), avroTxt.as("text"),
             avroDl.as("dead_letter")))
-        .when(gate && avroTxt.isNotNull,
+        .when(avroTxt.isNotNull,
           struct(lit("avro").as("kind"), avroTxt.as("text"),
             lit(null).cast(deadLetterStruct).as("dead_letter")))
         .otherwise(base)
     }
+  }
+
+  /** `df` plus column `out`, the decoded struct of column `bin` —
+    * struct(kind, text, dead_letter), [[decodedType]] — evaluated once per
+    * row. The Avro tier activates when the in-scope [[DecodeConfig]] carries
+    * an active [[SchemaProvider]] (default: none). UTF-8 validity and the
+    * Avro rendering, then their JSON parses, then the struct are three
+    * stacked projections, so each expensive part is a column that the next
+    * one reads (Catalyst does not inline an expression that its consumer
+    * references more than once) and the whole chain stays in one
+    * whole-stage-codegen stage. */
+  def withDecoded(df: DataFrame, bin: String, out: String)(
+      implicit dc: DecodeConfig): DataFrame = {
+    val b = col(bin)
+    val avro = avroText(b, dc.schemas)
+    val (valid, json, avroTxt, avroJson) =
+      (col("__valid"), col("__json"), col("__avro_txt"), col("__avro_json"))
+    df.withColumns(Map("__valid" -> isCleanUtf8(b)) ++ avro.map("__avro_txt" -> _))
+      .withColumns(Map("__json" -> when(valid, jsonOf(utf8(b)))) ++
+        avro.map(_ => "__avro_json" -> jsonOf(avroTxt)))
+      .withColumn(out, decodedOf(b, valid, json, avro.map(_ => (avroTxt, avroJson))))
+      .drop("__valid", "__json", "__avro_txt", "__avro_json")
   }
 
   private val deadLetterStruct: StructType = Schemas.deadLetter
@@ -161,7 +181,11 @@ object BruteForce {
   /** The reference's `ErrorUtil.toString` rendering of an arbitrary payload:
     * the decoded text regardless of kind (JSON for records — including
     * registry-Avro ones when schemas are configured — raw text for strings,
-    * hex for binary); null for null. */
-  def stringified(bin: Column)(implicit dc: DecodeConfig): Column =
-    decoded(bin).getField("text")
+    * hex for binary); null for null. Equal to the `text` of
+    * [[withDecoded]]'s struct, but without the JSON parse, which only decides
+    * the kind. */
+  def stringified(bin: Column)(implicit dc: DecodeConfig): Column = {
+    val base = when(isCleanUtf8(bin), utf8(bin)).otherwise(lower(hex(bin)))
+    avroText(bin, dc.schemas).fold(base)(coalesce(_, base))
+  }
 }

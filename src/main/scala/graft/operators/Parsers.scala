@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{BruteForce, DecodeConfig, HeaderOps}
+import graft.functions.HeaderOps
 import graft.functions.HeaderOps._
 import graft.model.{Headers => H, Messages, Schemas}
 
@@ -16,15 +16,21 @@ import org.apache.spark.sql.functions._
  * Each parser yields `struct(dead_letter, error)`: `error` carries the first
  * failure in the reference's sequential `orElseThrow` order, so the record can
  * be routed to the error channel instead of killing the job (T11; SURVEY
- * §2.5.2). All parsing stays inside whole-stage codegen — no UDFs.
+ * §2.5.2).
+ *
+ * The parsers never decode the payload themselves: they read the record's
+ * decoded value (a [[graft.functions.BruteForce.withDecoded]] struct, or its
+ * `text` rendering), which [[graft.plans.Analyzer.parsed]] computes once per
+ * record before dispatch. Every expression here has generated code, so the dispatch and all
+ * four parsers run inside whole-stage codegen.
  */
 object Parsers {
 
   /** Branch-dispatch predicates (reference DeadLetterAnalyzerTopology.java:160-185).
     * Additive, not exclusive: a record matching several is processed once per
     * branch (SURVEY §2.5.1). */
-  def isAvroDeadLetter(value: Column)(implicit dc: DecodeConfig): Column =
-    BruteForce.decoded(value).getField("kind") === "dead_letter"
+  def isAvroDeadLetter(decoded: Column): Column =
+    decoded.getField("kind") === "dead_letter"
   def hasStreamsHeaders(headers: Column): Column =
     HeaderOps.hasHeader(headers, H.ExceptionClassName)
   def hasNativeHeaders(headers: Column): Column =
@@ -53,15 +59,14 @@ object Parsers {
   /** Format #1: the value already is a dead letter (reference
     * DeadLetterAnalyzerTopology.java:98-100). Never errors — dispatch
     * guarantees the shape. */
-  def avroValue(value: Column)(implicit dc: DecodeConfig): Column = {
-    val dl = BruteForce.decoded(value).getField("dead_letter")
-    result(dl, lit(null).cast("string"))
-  }
+  def avroValue(decoded: Column): Column =
+    result(decoded.getField("dead_letter"), lit(null).cast("string"))
 
   /** Format #2a: bakdata error-handling headers (reference
     * StreamsDeadLetterParser.java:44-90). Value passes through as
-    * `input_value`; the record timestamp is propagated. */
-  def streamsHeaders(value: Column, headers: Column, timestamp: Column)(implicit dc: DecodeConfig): Column = {
+    * `input_value` (`inputValue`: the payload's string rendering); the record
+    * timestamp is propagated. */
+  def streamsHeaders(inputValue: Column, headers: Column, timestamp: Column): Column = {
     val partition = reqInt(headers, H.Partition)
     val topic = reqString(headers, H.Topic)
     val offset = reqLongWithFallback(headers, H.Offset, H.FaultyOffset)
@@ -72,7 +77,7 @@ object Parsers {
     val err = coalesce(partition.err, topic.err, offset.err, description.err,
       errorClass.err, message.err, stackTrace.err)
     result(
-      deadLetterStruct(BruteForce.stringified(value), partition.value, topic.value,
+      deadLetterStruct(inputValue, partition.value, topic.value,
         offset.value, description.value, errorClass.value, message.value,
         stackTrace.value, timestamp),
       err)
@@ -81,7 +86,7 @@ object Parsers {
   /** Format #2b: native Kafka Streams DLQ headers, KIP-1034 (reference
     * NativeStreamsDeadLetterParser.java:44-87). Description is synthesized
     * with `[unknown]` defaults. */
-  def nativeHeaders(value: Column, headers: Column, timestamp: Column)(implicit dc: DecodeConfig): Column = {
+  def nativeHeaders(inputValue: Column, headers: Column, timestamp: Column): Column = {
     val partition = reqInt(headers, H.NativePartitionName)
     val topic = optString(headers, H.NativeTopicName)
     val offset = reqLong(headers, H.NativeOffsetName)
@@ -95,7 +100,7 @@ object Parsers {
       coalesce(processorNodeId.value, lit(Messages.Unknown)),
       coalesce(taskId.value, lit(Messages.Unknown)))
     result(
-      deadLetterStruct(BruteForce.stringified(value), partition.value, topic.value,
+      deadLetterStruct(inputValue, partition.value, topic.value,
         offset.value, description, errorClass.value, message.value,
         stackTrace.value, timestamp),
       err)
@@ -105,7 +110,7 @@ object Parsers {
     * ConnectDeadLetterParser.java:46-92). Original topic/partition/offset are
     * optional; the stage/class/connector/task fields are required and fill the
     * description template. */
-  def connectHeaders(value: Column, headers: Column, timestamp: Column)(implicit dc: DecodeConfig): Column = {
+  def connectHeaders(inputValue: Column, headers: Column, timestamp: Column): Column = {
     val partition = optInt(headers, H.ConnectOrigPartition)
     val topic = optString(headers, H.ConnectOrigTopic)
     val offset = optLong(headers, H.ConnectOrigOffset)
@@ -121,7 +126,7 @@ object Parsers {
     val description = format_string(Messages.ConnectDescriptionTemplate,
       stage.value, clazz.value, connectorName.value, taskId.value)
     result(
-      deadLetterStruct(BruteForce.stringified(value), partition.value, topic.value,
+      deadLetterStruct(inputValue, partition.value, topic.value,
         offset.value, description, errorClass.value, message.value,
         stackTrace.value, timestamp),
       err)

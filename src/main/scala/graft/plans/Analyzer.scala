@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.{BruteForce, Classify, DecodeConfig}
+import graft.functions.{BruteForce, Classify, CodegenFunction, DecodeConfig}
 import graft.model.Messages
 import graft.operators.Parsers
 
@@ -58,28 +58,42 @@ object Analyzer {
   // ---------------------------------------------------------------------------
 
   /** Parse the envelope through all four format branches in a single pass.
-    * Dispatch is additive (SURVEY §2.5.1): a record matching several branch
-    * predicates is emitted once per matching branch — expressed as
-    * explode(array_compact(...)) rather than a union of four filters, so the
-    * input (a 100 TB Kafka scan at target scale) is read ONCE and all four
-    * parsers share one codegen stage with common-subexpression elimination.
-    * Records matching no branch are dropped, like the reference's unmatched
-    * records. Output = envelope columns + `parsed: struct(dead_letter,
-    * error)` + `branch`. */
+    * The value is decoded once per record ([[BruteForce.withDecoded]]) and
+    * the key rendered once (`key_string`), before dispatch; the four parsers
+    * read those columns. Dispatch is additive (SURVEY §2.5.1): a record
+    * matching several branch predicates is emitted once per matching branch —
+    * `explode(array(...))` of four optional branch structs plus a null
+    * filter, rather than a union of four filters, so the input (a 100 TB
+    * Kafka scan at target scale) is read ONCE and the decode, dispatch and
+    * parsers run in one whole-stage-codegen stage. The explode's input stays
+    * an expression, not a column: on a column Catalyst infers a
+    * `size(...) > 0` filter below the explode and fills it with a second copy
+    * of the whole parse. Records matching no branch are dropped, like the
+    * reference's unmatched records. Output = envelope columns + `key_string`
+    * + `value_string` (the value's string rendering) + `branch` +
+    * `parsed: struct(dead_letter, error)`. */
   def parsed(input: DataFrame)(implicit dc: DecodeConfig): DataFrame = {
-    val v = col("value"); val h = col("headers"); val ts = col("timestamp")
+    val d = col("__decoded"); val v = col("value_string")
+    val h = col("headers"); val ts = col("timestamp")
+    // each branch compiles to a method of its own: together, the four
+    // parsers overflow the JIT's method-size limit (CodegenFunction)
     def branch(name: String, predicate: Column, parser: Column): Column =
-      when(predicate, struct(lit(name).as("branch"), parser.as("parsed")))
+      CodegenFunction.wrap(
+        when(predicate, struct(lit(name).as("branch"), parser.as("parsed"))))
     val branches = array(
-      branch("avro_value", Parsers.isAvroDeadLetter(v), Parsers.avroValue(v)),
+      branch("avro_value", Parsers.isAvroDeadLetter(d), Parsers.avroValue(d)),
       branch("streams_headers", Parsers.hasStreamsHeaders(h), Parsers.streamsHeaders(v, h, ts)),
       branch("native_headers", Parsers.hasNativeHeaders(h), Parsers.nativeHeaders(v, h, ts)),
       branch("connect_headers", Parsers.hasConnectHeaders(h), Parsers.connectHeaders(v, h, ts)))
-    input
-      .withColumn("__branch", explode(array_compact(branches)))
+    BruteForce.withDecoded(input, "value", "__decoded")
+      .withColumns(Map(
+        "key_string" -> coalesce(BruteForce.stringified(col("key")), lit("null")),
+        "value_string" -> d.getField("text")))
+      .withColumn("__branch", explode(branches))
+      .filter(col("__branch").isNotNull)
       .withColumn("branch", col("__branch").getField("branch"))
       .withColumn("parsed", col("__branch").getField("parsed"))
-      .drop("__branch")
+      .drop("__branch", "__decoded")
   }
 
   // ---------------------------------------------------------------------------
@@ -92,11 +106,10 @@ object Analyzer {
     * column, not an exception (SURVEY §2.5.3). Output columns:
     * `topic, partition, offset, timestamp, key_string, error_type,
     *  dead_letter, enrich_error`. */
-  def enriched(parsedOk: DataFrame)(implicit dc: DecodeConfig): DataFrame = {
+  def enriched(parsedOk: DataFrame): DataFrame = {
     val dl = col("parsed").getField("dead_letter")
     val stackTrace = dl.getField("cause").getField("stack_trace")
     parsedOk
-      .withColumn("key_string", coalesce(BruteForce.stringified(col("key")), lit("null")))
       .withColumn("dead_letter", dl)
       .withColumn("enrich_error", enrichErrorMessage(stackTrace))
       .withColumn("error_type", when(stackTrace.isNotNull, Classify.classify(stackTrace)))
@@ -170,7 +183,7 @@ object Analyzer {
   /** Error channel (T11): both capture sites converted to dead letters with the
     * reference's fixed descriptions; key = stringified input key (S5). Shared
     * by the batch and streaming topologies. */
-  def errorsOf(parseErrors: DataFrame, analyzeErrors: DataFrame)(implicit dc: DecodeConfig): DataFrame =
+  def errorsOf(parseErrors: DataFrame, analyzeErrors: DataFrame): DataFrame =
     parseErrorDeadLetters(parseErrors)
       .unionByName(analyzeErrorDeadLetters(analyzeErrors))
 
@@ -183,16 +196,18 @@ object Analyzer {
 
   /** Parse-failure dead-letter value (description "Error converting errors
     * to dead letters", reference DeadLetterAnalyzerTopology.java:128-137) —
-    * shared by the batch error sink and the streaming stateless pass. */
-  private[graft] def parseErrorDl(err: Column, value: Column,
-      timestamp: Column)(implicit dc: DecodeConfig): Column =
+    * shared by the batch error sink and the streaming stateless pass.
+    * `inputValue` is the payload's string rendering ([[parsed]]'s
+    * `value_string`). */
+  private[graft] def parseErrorDl(err: Column, inputValue: Column,
+      timestamp: Column): Column =
     errorDeadLetter(
       description = lit(Messages.ErrorConvertingErrors),
       errorClass = when(err.startsWith("For input string"),
           lit("java.lang.NumberFormatException"))
         .otherwise(lit("java.lang.IllegalArgumentException")),
       message = err,
-      inputValue = BruteForce.stringified(value),
+      inputValue = inputValue,
       timestamp = timestamp)
 
   /** Analyze-failure dead-letter value (description "Error analyzing dead
@@ -207,12 +222,11 @@ object Analyzer {
       inputValue = to_json(deadLetter),
       timestamp = timestamp)
 
-  private def parseErrorDeadLetters(parseErrors: DataFrame)(implicit dc: DecodeConfig): DataFrame = {
-    val err = col("parsed").getField("error")
+  private def parseErrorDeadLetters(parseErrors: DataFrame): DataFrame =
     parseErrors.select(
-      coalesce(BruteForce.stringified(col("key")), lit("null")).as("key"),
-      parseErrorDl(err, col("value"), col("timestamp")).as("dead_letter"))
-  }
+      col("key_string").as("key"),
+      parseErrorDl(col("parsed").getField("error"), col("value_string"),
+        col("timestamp")).as("dead_letter"))
 
   private def analyzeErrorDeadLetters(analyzeErrors: DataFrame): DataFrame =
     analyzeErrors.select(

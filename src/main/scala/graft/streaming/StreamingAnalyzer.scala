@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import graft.functions.{BruteForce, Classify}
+import graft.functions.Classify
 import graft.model.Messages
 import graft.plans.Analyzer
 
@@ -210,7 +210,7 @@ object StreamingAnalyzer {
     val err = col("parsed").getField("error")
     val dl = col("parsed").getField("dead_letter")
     val stackTrace = dl.getField("cause").getField("stack_trace")
-    val keyString = coalesce(BruteForce.stringified(col("key")), lit("null"))
+    val keyString = col("key_string")
     // dedup_id: a DETERMINISTIC per-record identity, identical on replay —
     // source-derived rows use the elastic id of the input record; stateful
     // rows derive from the (deterministically recovered + sorted) state
@@ -226,7 +226,7 @@ object StreamingAnalyzer {
     // (one definition; parity drift between batch and streaming would
     // otherwise go unnoticed until a sink diff), fused into one per-row
     // case so the parse pipeline runs once.
-    val parseDl = Analyzer.parseErrorDl(err, col("value"), col("timestamp"))
+    val parseDl = Analyzer.parseErrorDl(err, col("value_string"), col("timestamp"))
     val analyzeDl = Analyzer.analyzeErrorDl(
       Analyzer.enrichErrorMessage(stackTrace), dl, col("timestamp"))
     val allValue = to_json(struct(
@@ -242,7 +242,9 @@ object StreamingAnalyzer {
         .otherwise(row("all", sourceId, allValue, sourceId))
         .as("r"))
 
-    // Stateful pass — referenced once; per-result-row 1→N expansion.
+    // Stateful pass — referenced once; per-result-row 1→N expansion
+    // (`explode` of an `array` expression plus a null filter, as in
+    // Analyzer.parsed).
     val good = Analyzer.enriched(p.filter(err.isNull))
       .filter(col("enrich_error").isNull)
     val results = statResults(good, onAggRecord, stateTtlMs)
@@ -259,7 +261,7 @@ object StreamingAnalyzer {
       inputValue = col("aggError.inputValue"),
       timestamp = timestamp_micros(col("aggError.timestampUs")))
     val fromResults = results.select(
-      explode(array_compact(array(
+      explode(array(
         when(col("aggError").isNull, row("stats", statsKey,
           statsAvroEncode(col("count"),
             Analyzer.formatTimestamp(timestamp_micros(col("createdUs"))),
@@ -274,8 +276,9 @@ object StreamingAnalyzer {
         when(col("aggError").isNotNull,
           row("errors", col("aggError.recordKey"), to_json(aggErrDl),
             Analyzer.elasticId(col("topic"), col("aggError.partition"),
-              col("aggError.offset")))))))
+              col("aggError.offset"))))))
         .as("r"))
+      .filter(col("r").isNotNull)
 
     stateless.unionByName(fromResults)
       .select(col("r.sink").as("sink"), col("r.key").as("key"),

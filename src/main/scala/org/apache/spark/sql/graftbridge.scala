@@ -17,6 +17,10 @@ object graftbridge {
   def autoBroadcastThreshold(s: SparkSession): Long =
     s.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
 
+  /** Whether the session's conf holds an explicit value for `key` (set at
+    * submit time or at runtime), as opposed to the entry's default. */
+  def confIsSet(s: SparkSession, key: String): Boolean = s.conf.contains(key)
+
   /** Catalyst's optimizer-time size estimate for a frame — available without
     * running a job (statistics propagation over the optimized logical plan). */
   def planSizeBytes(df: DataFrame): BigInt =

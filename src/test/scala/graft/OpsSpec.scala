@@ -4300,6 +4300,7 @@ class OpsSpec extends SparkSpec {
       .filter(col("id") > 1)
     val ckDir = java.nio.file.Files.createTempDirectory("graft-relbar").toString
     val expected = df.collect().toSet
+    val prevCkDir = spark.sparkContext.getCheckpointDir
     try {
       spark.sparkContext.setCheckpointDir(ckDir)
       spark.conf.set(CacheScope.ReliableBarrierConf, "true")
@@ -4319,6 +4320,8 @@ class OpsSpec extends SparkSpec {
     } finally {
       spark.conf.unset(CacheScope.ReliableBarrierConf)
       CacheScope.releaseAll(spark)
+      org.apache.spark.GraftTestHooks.restoreCheckpointDir(spark.sparkContext, prevCkDir)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckDir))
     }
   }
 

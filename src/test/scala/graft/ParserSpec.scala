@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.{BruteForce, DeadLetterJson, DecodeConfig}
 import graft.model.{Headers => H}
 import graft.operators.Parsers
 import graft.plans.Analyzer
@@ -176,6 +177,10 @@ class ParserSpec extends SparkSpec {
       {"name":"stack_trace","type":["null","string"],"default":null}]}},
     {"name":"input_timestamp","type":["null","long"],"default":null}]}"""
 
+  /** The decoded struct of each row's `value`, flattened. */
+  private def decode(df: org.apache.spark.sql.DataFrame, dc: DecodeConfig) =
+    BruteForce.withDecoded(df, "value", "d")(dc).select("d.*")
+
   private def confluentFrame(schemaJson: String, schemaId: Int,
       fill: org.apache.avro.generic.GenericData.Record => Unit): Array[Byte] = {
     val schema = new org.apache.avro.Schema.Parser().parse(schemaJson)
@@ -205,10 +210,8 @@ class ParserSpec extends SparkSpec {
       r.put("description", "description"); r.put("cause", cause)
       r.put("input_timestamp", 200L)
     })
-    val d = Seq(Tuple1(framed)).toDF("value")
-      .select(graft.functions.BruteForce
-        .decodedWithAvro(col("value"), Map(7 -> deadLetterAvroSchema)).as("d"))
-      .select("d.*").head()
+    val d = decode(Seq(Tuple1(framed)).toDF("value"),
+      DecodeConfig(Map(7 -> deadLetterAvroSchema))).head()
     assert(d.getAs[String]("kind") == "dead_letter")
     val dl = d.getAs[Row]("dead_letter")
     assert(dl.getAs[String]("input_value") == "foo")
@@ -273,10 +276,8 @@ class ParserSpec extends SparkSpec {
         schema.getField("cause").schema()))
     })
     val trFrame = confluentFrame(trSchema, 9, _.put("id", 5))
-    val rows = Seq(Tuple1(dlFrame), Tuple1(trFrame), Tuple1(utf8("plain"))).toDF("value")
-      .select(graft.functions.BruteForce
-        .decodedWithAvro(col("value"), provider).as("d"))
-      .select("d.*").collect()
+    val rows = decode(Seq(Tuple1(dlFrame), Tuple1(trFrame), Tuple1(utf8("plain")))
+      .toDF("value"), DecodeConfig(provider)).collect()
     assert(rows(0).getAs[String]("kind") == "dead_letter")
     assert(rows(1).getAs[String]("kind") == "avro")
     assert(rows(1).getAs[String]("text").replaceAll("\\s", "") == """{"id":5}""")
@@ -321,12 +322,9 @@ class ParserSpec extends SparkSpec {
       val unknownFrame = confluentFrame(trSchema, 13, _.put("id", 6))
       // many rows in ONE action: the per-id lookup must be memoized per
       // executor, not re-queried per record
-      val rows = (Seq.fill(50)(Tuple1(dlFrame)) ++
+      val rows = decode((Seq.fill(50)(Tuple1(dlFrame)) ++
           Seq(Tuple1(trFrame), Tuple1(unknownFrame)))
-        .toDF("value").coalesce(1)
-        .select(graft.functions.BruteForce
-          .decodedWithAvro(col("value"), provider).as("d"))
-        .select("d.*").collect()
+        .toDF("value").coalesce(1), DecodeConfig(provider)).collect()
       assert(rows.take(50).forall(_.getAs[String]("kind") == "dead_letter"))
       // 404 for id 9 -> static fallback resolves it (registry-first chain)
       assert(rows(50).getAs[String]("kind") == "avro")
@@ -401,10 +399,8 @@ class ParserSpec extends SparkSpec {
     val trSchema =
       """{"type":"record","name":"TestRecord","fields":[{"name":"id","type":"int"}]}"""
     val framed = confluentFrame(trSchema, 1, _.put("id", 1))
-    val d = Seq(Tuple1(framed)).toDF("value")
-      .select(graft.functions.BruteForce
-        .decodedWithAvro(col("value"), Map(1 -> trSchema)).as("d"))
-      .select("d.*").head()
+    val d = decode(Seq(Tuple1(framed)).toDF("value"),
+      DecodeConfig(Map(1 -> trSchema))).head()
     assert(d.getAs[String]("kind") == "avro")
     assert(d.getAs[String]("text").replaceAll("\\s", "") == """{"id":1}""")
     assert(d.isNullAt(d.fieldIndex("dead_letter")))
@@ -420,15 +416,192 @@ class ParserSpec extends SparkSpec {
         schema.getField("cause").schema()))
     })
     // id 99 is not in the configured map -> not decoded as Avro
-    val d = Seq(Tuple1(framed)).toDF("value")
-      .select(graft.functions.BruteForce
-        .decodedWithAvro(col("value"), Map(7 -> deadLetterAvroSchema)).as("d"))
-      .select("d.*").head()
+    val d = decode(Seq(Tuple1(framed)).toDF("value"),
+      DecodeConfig(Map(7 -> deadLetterAvroSchema))).head()
     assert(d.getAs[String]("kind") != "dead_letter" && d.getAs[String]("kind") != "avro")
     // no schema map at all (the default decode) -> same fall-through
-    val d2 = Seq(Tuple1(framed)).toDF("value")
-      .select(graft.functions.BruteForce.decoded(col("value")).as("d"))
-      .select("d.*").head()
+    val d2 = decode(Seq(Tuple1(framed)).toDF("value"), DecodeConfig.default).head()
     assert(d2.getAs[String]("kind") != "dead_letter" && d2.getAs[String]("kind") != "avro")
   }
+
+  // ---- differential property: DeadLetterJson vs from_json ----
+
+  /** Payload bytes for the dead-letter decode: valid dead letters, wrong
+    * field types, duplicate keys, truncated JSON, a quoted "description"
+    * inside strings or plain text, and non-UTF-8 bytes. */
+  private val payloads: org.scalacheck.Gen[Array[Byte]] = {
+    import org.scalacheck.Gen
+    import graft.model.JsonText.str
+    val text = Gen.oneOf(Gen.alphaNumStr, Gen.asciiPrintableStr,
+      Gen.const("tab\tnew\nline \"q\" back\\slash caf\u00e9 \u2713"),
+      Gen.const("a \"description\" inside"))
+    def opt[A](g: Gen[A], render: A => String) =
+      Gen.option(g).map(_.map(render).getOrElse("null"))
+    val cause = for {
+      ec <- opt(text, str); msg <- opt(text, str); st <- opt(text, str)
+    } yield s"""{"error_class":$ec,"message":$msg,"stack_trace":$st}"""
+    val fields = for {
+      iv <- opt(text, str); part <- opt(Gen.choose(-5, 5000), (i: Int) => i.toString)
+      topic <- opt(text, str); off <- opt(Gen.choose(0L, Long.MaxValue), (l: Long) => l.toString)
+      desc <- text; c <- cause; ts <- opt(Gen.choose(0L, 4102444800000L), (l: Long) => l.toString)
+    } yield Seq(s""""input_value":$iv""", s""""partition":$part""", s""""topic":$topic""",
+      s""""offset":$off""", s""""description":${str(desc)}""", s""""cause":$c""",
+      s""""input_timestamp":$ts""")
+    val valid = for {
+      fs <- fields; order <- Gen.pick(fs.size, fs.indices); drop <- Gen.choose(0, 2)
+    } yield order.drop(drop).map(fs).mkString("{", ",", "}")
+    val wrongType = for {
+      fs <- fields; i <- Gen.choose(0, fs.size - 1)
+      bad <- Gen.oneOf("\"x\"", "1.5", "true", "[1,2]", "{\"a\":1}", "99999999999999999999")
+    } yield fs.updated(i, fs(i).takeWhile(_ != ':') + ":" + bad).mkString("{", ",", "}")
+    val duplicate = for { v <- valid; d <- text }
+      yield v.dropRight(1) + s""","description":${str(d)}}"""
+    val truncated = for { v <- valid; n <- Gen.choose(0, v.length) } yield v.take(n)
+    val quoted = for { t <- text; pre <- Gen.oneOf("{\"message\":", "say ", "[") }
+      yield pre + str("the \"description\" of " + t)
+    val utf8Payload = Gen.oneOf(valid, wrongType, duplicate, truncated, quoted, text)
+      .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val invalidUtf8 = for {
+      v <- valid; i <- Gen.choose(0, v.length)
+      bad <- Gen.oneOf(Seq(0xff), Seq(0xc3), Seq(0xe2, 0x28, 0xa1), Seq(0x80, 0x80))
+    } yield {
+      val b = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      b.take(i) ++ bad.map(_.toByte) ++ b.drop(i)
+    }
+    Gen.frequency(8 -> utf8Payload, 2 -> invalidUtf8, 1 -> Gen.const(null))
+  }
+
+  private def checkProp(p: org.scalacheck.Prop): Unit = {
+    val r = org.scalacheck.Test.check(org.scalacheck.Test.Parameters.default
+      .withMinSuccessfulTests(6).withInitialSeed(org.scalacheck.rng.Seed(20261018L)), p)
+    assert(r.passed, r.status.toString)
+  }
+
+  /** The frame through an RDD, so the optimizer cannot fold the projection
+    * into a local relation and every row runs the planned code. */
+  private def framed(rows: Seq[Row], schema: org.apache.spark.sql.types.StructType) =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+
+  test("DeadLetterJson equals from_json with whole-stage codegen on and off") {
+    import org.apache.spark.sql.functions.from_json
+    import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructType}
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("value", BinaryType)))
+    // whole-stage codegen; row-based generated projections; interpreted eval
+    val modes = Seq(Seq("true", "FALLBACK"), Seq("false", "CODEGEN_ONLY"), Seq("false", "NO_CODEGEN"))
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    checkProp(org.scalacheck.Prop.forAllNoShrink(org.scalacheck.Gen.listOfN(40, payloads)) { ps =>
+      val df = framed(ps.zipWithIndex.map { case (p, i) => Row(i, p) }, schema)
+      val txt = col("value").cast("string")
+      def rows(c: org.apache.spark.sql.Column) =
+        df.select(col("id"), c.as("j")).collect().map(r => r.getInt(0) -> r.get(1)).toMap
+      org.scalacheck.Prop.all(modes.map { mode =>
+        keys.zip(mode).foreach { case (k, v) => spark.conf.set(k, v) }
+        try {
+          val expected = rows(from_json(txt, BruteForce.deadLetterJson))
+          val actual = rows(DeadLetterJson.parse(txt))
+          org.scalacheck.Prop.propBoolean(actual == expected) :| s"modes $mode: " +
+            actual.filter(kv => expected(kv._1) != kv._2).toSeq.sortBy(_._1).take(3)
+        } finally keys.foreach(spark.conf.unset)
+      }: _*)
+    })
+  }
+
+  test("every generated envelope row parses ok or becomes a parse error, once per branch") {
+    import org.apache.spark.sql.functions.{coalesce, from_json, is_valid_utf8, lit}
+    val envelopes = for {
+      ps <- org.scalacheck.Gen.listOfN(30, payloads)
+      hs <- org.scalacheck.Gen.listOfN(30, org.scalacheck.Gen.oneOf(
+        Seq.empty[Row], streamsHappy,
+        streamsHappy.map(r => if (r.getString(0) == H.Partition) h(H.Partition, "x") else r)))
+    } yield ps.zip(hs).zipWithIndex.map { case ((p, hdr), i) =>
+      Row("t", 0, i.toLong, new java.sql.Timestamp(0), utf8(s"k$i"), p, hdr)
+    }
+    checkProp(org.scalacheck.Prop.forAllNoShrink(envelopes) { rows =>
+      val env = framed(rows, graft.model.Schemas.kafkaEnvelope)
+      // the expected branches, from Spark's own from_json
+      val txt = col("value").cast("string")
+      val dl = from_json(txt, BruteForce.deadLetterJson)
+      val expected = env.select(col("offset"),
+        coalesce(is_valid_utf8(txt) && txt.contains("\"description\"") &&
+          dl.getField("description").isNotNull && dl.getField("cause").isNotNull,
+          lit(false)).as("avro"),
+        (org.apache.spark.sql.functions.size(col("headers")) > 0).as("streams"))
+        .collect().map { r =>
+          r.getLong(0) -> (Seq("avro_value").filter(_ => r.getBoolean(1)) ++
+            Seq("streams_headers").filter(_ => r.getBoolean(2))).toSet
+        }.toMap
+      val p = Analyzer.parsed(env)
+      val got = p.select(col("offset"), col("branch"), col("parsed.error").isNull)
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getBoolean(2)))
+      val byOffset = got.groupBy(_._1).map { case (o, rs) => o -> rs.map(_._2).toSeq }
+      val out = Analyzer.analyze(env)
+      // each (record, branch) exactly once; ok rows reach `all` or, with a
+      // null stack trace, the error sink; failed parses reach the error sink
+      expected.forall { case (o, bs) =>
+          byOffset.getOrElse(o, Seq.empty).sorted == bs.toSeq.sorted } &&
+        out.all.count() + out.errors.count() == got.length &&
+        out.errors.count() >= got.count(!_._3)
+    })
+  }
+
+  // ---- plan shape of the production topology ----
+
+  test("unified plan: one decode per fork, every parse operator in whole-stage codegen") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Hex, JsonToStructs, ArrayFilter}
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark2.sqlContext
+    val stream = MemoryStream[ParserSpec.Envelope]
+    val q = graft.streaming.StreamingAnalyzer.unified(stream.toDF())
+      .writeStream.format("memory").queryName("unified_plan_shape")
+      .outputMode("append").start()
+    try {
+      stream.addData(ParserSpec.Envelope("t", 0, 0L, new java.sql.Timestamp(0),
+        utf8("key"), utf8(deadLetterJson(StackTrace)), Seq()))
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan
+      // operators a stage boundary leaves to the interpreter
+      def outside(p: SparkPlan): Seq[SparkPlan] = p match {
+        case w: WholeStageCodegenExec => inside(w.child)
+        case o => o +: o.children.flatMap(outside)
+      }
+      def inside(p: SparkPlan): Seq[SparkPlan] = p match {
+        case i: InputAdapter => outside(i.child)
+        case o => o.children.flatMap(inside)
+      }
+      val interpreted = outside(plan).filter {
+        case _: GenerateExec | _: ProjectExec => true
+        case _ => false
+      }
+      assert(interpreted.isEmpty, s"interpreted operators:\n$plan")
+      val exprs = plan.collect { case p => p.expressions }.flatten
+        .flatMap(_.collect { case e => e })
+      assert(!exprs.exists(_.isInstanceOf[JsonToStructs]), plan.toString)
+      assert(!exprs.exists(_.isInstanceOf[ArrayFilter]), plan.toString)
+      // the source forks twice (stateless and stateful pass, AnalyzerMain's
+      // caveat); each fork decodes the value and renders the key once
+      assert(exprs.count(_.isInstanceOf[DeadLetterJson]) == 2, plan.toString)
+      def hexOf(name: String) = exprs.count {
+        case Hex(a: Attribute) => a.name == name
+        case _ => false
+      }
+      assert(hexOf("value") == 2 && hexOf("key") == 2, plan.toString)
+      // every generated method stays under HotSpot's 8,000-byte limit for JIT
+      // compilation (`-XX:+DontCompileHugeMethods`), which each parser
+      // branch's own method (CodegenFunction) keeps the explode under
+      val sizes = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
+        .map(_._3.maxMethodCodeSize)
+      assert(sizes.nonEmpty && sizes.max <= 8000, sizes)
+    } finally q.stop()
+  }
+}
+
+object ParserSpec {
+  final case class Header(key: String, value: Array[Byte])
+  final case class Envelope(topic: String, partition: Int, offset: Long,
+      timestamp: java.sql.Timestamp, key: Array[Byte], value: Array[Byte],
+      headers: Seq[Header])
 }

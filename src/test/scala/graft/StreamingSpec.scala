@@ -282,6 +282,18 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("AnalyzerMain defaults shuffle partitions to the cluster parallelism, unless set") {
+    val key = "spark.sql.shuffle.partitions"
+    val s = spark.newSession()
+    s.conf.unset(key)
+    assert(s.conf.get(key) == "200") // Spark's default: 200 state stores per trigger
+    AnalyzerMain.defaultShufflePartitions(s)
+    assert(s.conf.get(key) == s.sparkContext.defaultParallelism.toString)
+    s.conf.set(key, "7")
+    AnalyzerMain.defaultShufflePartitions(s)
+    assert(s.conf.get(key) == "7")
+  }
+
   test("stateful analyzer runs green under the RocksDB state store provider") {
     // the production default (AnalyzerMain --state-store rocksdb): the
     // statistics state lives in RocksDB on executor-local disk rather than
